@@ -34,61 +34,14 @@ object RunPipeline {
     spark.sparkContext.setLogLevel("WARN")
 
     val benchOnly = outDir.contains("--bench")
-    // GRAFT_STAGE_TIMING=1: per-stage breakdown for SF-linearity
-    // diagnosis (extract vs link vs triple-join, plus the table sizes
-    // that could grow superlinearly). Forces per-stage actions, so the
-    // total differs from the fused single-job protocol — diagnostic
-    // only, never part of the timed bench numbers.
-    val stageTiming = sys.env.get("GRAFT_STAGE_TIMING").contains("1")
     def once(runSf: Double): (Long, Double) = {
       val t0 = System.nanoTime()
-      if (stageTiming) {
-        import spark.implicits._
-        val raw = CorpusGen.rawDocs(spark, runSf)
-        val gaz = CorpusGen.gazette(runSf)
-        val extracted = Pipeline.extract(spark, raw, gaz,
-          keepNegatives = false).persist()
-        val nDocs = extracted.count()
-        val tExtract = (System.nanoTime() - t0) / 1e9
-        val t1 = System.nanoTime()
-        val entities = extracted.flatMap(_.entities)
-          .groupBy($"entity_key")
-          .agg(org.apache.spark.sql.functions.first($"kind").as("kind"),
-            org.apache.spark.sql.functions.min($"alias").as("alias"),
-            org.apache.spark.sql.functions.max($"from_gazette")
-              .as("from_gazette")).persist()
-        val nEnt = entities.count()
-        val canonical = graft.canonical.Canonicalize
-          .components(spark, entities)
-          .withColumnRenamed("entity_key", "k").persist()
-        val nComp = canonical.count()
-        val tLink = (System.nanoTime() - t1) / 1e9
-        val t2 = System.nanoTime()
-        val preds = extracted.flatMap(_.predictions).persist()
-        val nPreds = preds.count()
-        val dim = (df: org.apache.spark.sql.DataFrame) =>
-          graft.textops.TextOps.dimSide(df)
-        val n = preds.toDF().filter($"answer")
-          .join(dim(canonical.withColumnRenamed("canonical", "subj")),
-            $"left_key" === $"k").drop("k")
-          .join(dim(canonical.withColumnRenamed("canonical", "obj")),
-            $"right_key" === $"k").drop("k")
-          .count()
-        val tJoin = (System.nanoTime() - t2) / 1e9
-        val secs = (System.nanoTime() - t0) / 1e9
-        println(f"""{"stage_timing":true,"sf":$runSf,"docs":$nDocs,"entities":$nEnt,"components":$nComp,"predictions":$nPreds,"triples":$n,"extract_sec":$tExtract%.2f,"link_sec":$tLink%.2f,"join_sec":$tJoin%.2f,"total_sec":$secs%.2f}""")
-        extracted.unpersist(); entities.unpersist()
-        canonical.unpersist(); preds.unpersist()
-        graft.pipeline.Caches.release()
-        (n, secs)
-      } else {
-        val (t, cl) = Pipeline.runWithCleanup(spark,
-          CorpusGen.rawDocs(spark, runSf), CorpusGen.gazette(runSf))
-        val n = t.count()
-        val secs = (System.nanoTime() - t0) / 1e9
-        cl()
-        (n, secs)
-      }
+      val (t, cl) = Pipeline.runWithCleanup(spark,
+        CorpusGen.rawDocs(spark, runSf), CorpusGen.gazette(runSf))
+      val n = t.count()
+      val secs = (System.nanoTime() - t0) / 1e9
+      cl()
+      (n, secs)
     }
     if (benchOnly) {
       // INTRA-LEG probe points (GRAFT_INNER_PROBES=1, set by Bench's

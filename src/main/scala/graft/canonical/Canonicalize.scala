@@ -1,6 +1,6 @@
 package graft.canonical
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import scala.collection.mutable
 import graft.schema.Mention
@@ -14,84 +14,71 @@ import graft.schema.Mention
   *     a per-document local fold (no shuffle; runs inside `mapGroups`).
   *
   *  2. [[Canonicalize.components]] — the cross-document canonicalization of
-  *     the north star: connected components over alias/surface-form
-  *     similarity edges, as iterative DataFrame joins propagating
-  *     `min(component)` to fixpoint. The per-iteration aggregations are
-  *     algebraic (`min`), so Spark's partial aggregation (map-side combine)
-  *     absorbs alias-frequency skew before the shuffle; each iteration is
-  *     checkpointed to keep lineage flat at 10^12-file scale.
+  *     the north star: two entities of one kind merge when their aliases
+  *     share a surface form. The forms refine into the folded form
+  *     ([[foldedExpr]]), so a connected component IS a (kind, folded-form)
+  *     hub group ([[hubExpr]]): CC is one algebraic `min` aggregation per
+  *     hub, whose partial aggregation (map-side combine) absorbs
+  *     alias-frequency skew before the shuffle. The streaming linker keys
+  *     its touch detection on the same hub.
   */
 object Canonicalize {
 
-  /** Normalized surface forms of an alias; two entities sharing any form
-    * are merged (same kind only). Forms: exact, lowercase, and a
-    * case/underscore fold that unifies snake_case / camelCase / kebab-case
-    * identifiers — the code-corpus analog of IEPy's surface-form identity
-    * (`stanford_preprocess.py:285-304`).
-    *
-    * HARD CONTRACT for [[components]]' fixed iteration count: every form
-    * here must be a refinement chain ENDING in the most-folded form —
-    * i.e. two aliases sharing ANY form also share the folded form (exact
-    * equality => lower equality => folded equality). That makes every
-    * component a star through its folded-form hub (diameter <= 2 entity
-    * hops), which 2 min-propagation rounds provably converge. Adding a
-    * normalizer that can CHAIN (edit-distance buckets, token-prefix
-    * families, embedding buckets) breaks the star shape: raise
-    * `iterations` AND run with `verifyConverged = true` in tests, or
-    * components silently under-merge. */
-  def normalForms(alias: String): Seq[String] = {
-    val lower = alias.toLowerCase
-    val folded = lower.replaceAll("[-_\\s]+", "")
-    Seq(alias, lower, folded).distinct
-  }
+  /** Separator runs the fold removes — the ONE copy of the fold regexp
+    * (the in-document surface chains of [[CorefChains]] apply it too). */
+  private[graft] val FoldSeparators = "[-_\\s]+"
 
-  /** [[normalForms]] as a pure Catalyst expression over an `alias`
-    * column (codegen-friendly, no UDF) — the ONE definition both
-    * [[components]]' edge derivation and the streaming incremental
-    * linker's touch detection use; if they ever diverged, the
-    * incremental path would silently under-merge. */
-  private[graft] def formsExpr: org.apache.spark.sql.Column =
-    array_distinct(array(
-      col("alias"), lower(col("alias")),
-      regexp_replace(lower(col("alias")), "[-_\\s]+", "")))
+  /** The folded form of an `alias` column: lowercase with separator runs
+    * removed, unifying snake_case / camelCase / kebab-case identifiers —
+    * the code-corpus analog of IEPy's surface-form identity
+    * (`stanford_preprocess.py:285-304`). A pure Catalyst expression
+    * (codegen-friendly, no UDF).
+    *
+    * HARD CONTRACT (the refinement chain): every surface form in
+    * [[formsExpr]] refines into the folded form — two aliases sharing ANY
+    * form also share the folded form (exact equality => lower equality =>
+    * folded equality), and folding is idempotent. That makes "shares a
+    * form with" transitive through the folded form, so a component is
+    * exactly a [[hubExpr]] group and [[components]] needs no propagation
+    * rounds. A normalizer that can CHAIN (edit-distance buckets,
+    * token-prefix families, embedding buckets, sparse similarity joins)
+    * breaks the contract: components would silently under-merge, and
+    * `components(verifyConverged = true)` fails. Such a normalizer needs
+    * iterative min-propagation back in [[components]] (and component-hop
+    * closure in the streaming linker's touch detection) — no count or
+    * knob of the hub aggregation can recover the missing merges. */
+  private[graft] def foldedExpr: Column =
+    regexp_replace(lower(col("alias")), FoldSeparators, "")
 
-  /** (entity_key, form) rows for an entity table — form keys include the
-    * kind (never merge across kinds), exactly as [[components]] builds
-    * its edges. Entity-vocab bounded. */
-  def entityForms(entities: DataFrame): DataFrame =
-    entities
-      .select(col("entity_key"), col("kind"), explode(formsExpr).as("f"))
-      .select(col("entity_key"),
-        concat_ws(" ", col("kind"), col("f")).as("form"))
+  /** The hub key of an entity row: kind + folded form. kind is part of
+    * the key, so entities never merge across kinds (reference
+    * `stanford_preprocess.py:366-374`); concat_ws skips a null folded
+    * form, so null aliases of one kind share the bare-kind hub. */
+  private[graft] def hubExpr: Column =
+    concat_ws(" ", col("kind"), foldedExpr)
 
-  /** Connected components over a bipartite (vertex, form) edge list.
+  /** Every surface form of an `alias` column: exact, lowercase, folded.
+    * Only the [[requireConverged]] guard reads it — the guard checks
+    * that merging along ALL these forms adds nothing beyond the hub. */
+  private[graft] def formsExpr: Column =
+    array_distinct(array(col("alias"), lower(col("alias")), foldedExpr))
+
+  /** Connected components over shared (kind, surface-form) edges.
     *
-    * Input: DataFrame [entity_key: String, kind: String, alias: String].
-    * Output: DataFrame [entity_key, canonical] where canonical is the
-    * component representative's entity_key.
+    * Input: DataFrame [entity_key: String, kind: String, alias: String]
+    * (optionally from_gazette: Boolean). Output: DataFrame
+    * [entity_key, canonical] where canonical is the component
+    * representative's entity_key.
     *
-    * THE HUB REDUCTION: the refinement-chain contract at [[normalForms]]
-    * (two aliases sharing ANY form also share the most-folded form —
-    * fold(exact) = fold(lower) = fold(folded) = the entity's folded
-    * form) makes "shares a form with" TRANSITIVE through the folded
-    * form: if a~b and b~c then fold(a) = fold(b) = fold(c). A component
-    * is therefore exactly a (kind, folded-form) group, and iterative
-    * min-propagation collapses to ONE algebraic min aggregation on the
-    * hub plus one dimension join to map entities to their hub's winner —
-    * one shuffle of (hub, init) pairs with map-side combine (hot-alias
-    * skew is absorbed exactly as before: CanonicalizeSkewSpec), instead
-    * of two aggregation shuffles and up to two joins per propagation
-    * round. `verifyConverged = true` proves the reduction on the actual
-    * data: one full min-propagation round over ALL (entity, form) edges
-    * must be a fixpoint — a normalizer that chains beyond its folded
-    * form (edit-distance buckets, token prefixes) breaks the contract
-    * and trips the guard, same as it always did.
-    *
-    * `iterations == 0` keeps the generic un-propagated initial
-    * components (the guard's negative-case seam, used by PipelineSpec to
-    * prove the guard fires). */
+    * By the refinement-chain contract at [[foldedExpr]] a component is a
+    * [[hubExpr]] group: one algebraic min aggregation on the hub plus
+    * one dimension join maps entities to their hub's winner — one
+    * shuffle of (hub, init) pairs with map-side combine (hot-alias skew
+    * is absorbed: CanonicalizeSkewSpec). `verifyConverged = true` proves
+    * the contract on the actual data with [[requireConverged]] (costs
+    * one action; test/debug only). */
   def components(spark: SparkSession, entities: DataFrame,
-      iterations: Int = 2, verifyConverged: Boolean = false): DataFrame = {
+      verifyConverged: Boolean = false): DataFrame = {
     import spark.implicits._
     // The component id IS the canonical pick: aggregate the minimum of
     // struct(gaz_rank, entity_key), so gazette-born readable keys win the
@@ -100,50 +87,41 @@ object Canonicalize {
       if (entities.columns.contains("from_gazette"))
         when(col("from_gazette"), 0).otherwise(1)
       else lit(0)
-    // kind is part of the hub key: never merge across kinds (reference
-    // `stanford_preprocess.py:366-374`). concat_ws skips a null folded
-    // form, exactly as the old edge derivation's concat_ws did for a
-    // null alias's single null form.
-    val hub = concat_ws(" ", $"kind",
-      regexp_replace(lower($"alias"), "[-_\\s]+", ""))
+    val keyed = entities.select($"entity_key", hubExpr.as("hub"),
+      struct(gazRank.as("r"), $"entity_key".as("k")).as("init"))
+    // byHub is component-count-sized — far below the entity table.
+    // dimSide: AQE broadcasts it when measured small (default); the
+    // bench children run AQE-off and force the hint
+    // (graft.dim.broadcast).
+    val byHub = keyed.groupBy($"hub").agg(min($"init").as("component"))
+    val canonical = keyed.join(graft.textops.TextOps.dimSide(byHub), "hub")
+      .select($"entity_key", $"component.k".as("canonical"))
+    if (verifyConverged) requireConverged(entities, canonical)
+    canonical
+  }
 
-    val comp: DataFrame =
-      if (iterations >= 1) {
-        val keyed = entities.select($"entity_key", hub.as("hub"),
-          struct(gazRank.as("r"), $"entity_key".as("k")).as("init"))
-        // byHub is component-count-sized — far below the entity table.
-        // dimSide: AQE broadcasts it when measured small (default); the
-        // bench children run AQE-off and force the hint
-        // (graft.dim.broadcast).
-        val byHub = keyed.groupBy($"hub").agg(min($"init").as("component"))
-        keyed.join(graft.textops.TextOps.dimSide(byHub), "hub")
-          .select($"entity_key", $"component")
-      } else {
-        entities.select($"entity_key",
-          struct(gazRank.as("r"), $"entity_key".as("k")).as("component"))
-      }
-
-    if (verifyConverged) {
-      // one full min-propagation round over ALL (entity, form) edges must
-      // be a fixpoint — the guard for the refinement-chain contract at
-      // normalForms (costs one action; test/debug only)
-      val edges = entities
-        .select($"entity_key", $"kind", explode(formsExpr).as("f"))
-        .select($"entity_key", concat_ws(" ", $"kind", $"f").as("form"))
-      val frozen = comp.persist()
-      val byForm = edges.join(frozen, "entity_key")
-        .groupBy($"form").agg(min($"component").as("fcomp"))
-      val changed = edges.join(byForm, "form")
-        .groupBy($"entity_key").agg(min($"fcomp").as("next"))
-        .join(frozen, "entity_key")
-        .where($"next" =!= $"component").count()
-      require(changed == 0,
-        s"CC not converged after $iterations rounds: $changed components " +
-          "still moving — a normalizer violates the refinement-chain " +
-          "contract (see normalForms)")
-      frozen.unpersist()
-    }
-    comp.select($"entity_key", $"component.k".as("canonical"))
+  /** The refinement-chain guard: one full min-propagation round over ALL
+    * (entity, kind + surface-form) edges of `entities` must leave the
+    * `canonical` labelling unchanged, which holds iff no form edge joins
+    * two differently labelled entities (no under-merge). Throws
+    * IllegalArgumentException ("not converged") otherwise. */
+  private[graft] def requireConverged(entities: DataFrame,
+      canonical: DataFrame): Unit = {
+    val edges = entities
+      .select(col("entity_key"), col("kind"), explode(formsExpr).as("f"))
+      .select(col("entity_key"),
+        concat_ws(" ", col("kind"), col("f")).as("form"))
+    val frozen = canonical.persist()
+    val byForm = edges.join(frozen, "entity_key")
+      .groupBy(col("form")).agg(min(col("canonical")).as("fcomp"))
+    val changed = edges.join(byForm, "form")
+      .groupBy(col("entity_key")).agg(min(col("fcomp")).as("next"))
+      .join(frozen, "entity_key")
+      .where(col("next") =!= col("canonical")).count()
+    frozen.unpersist()
+    require(changed == 0,
+      s"CC not converged: $changed entities still moving — a normalizer " +
+        "violates the refinement-chain contract (see foldedExpr)")
   }
 }
 

@@ -8,8 +8,8 @@ import graft.schema.Mention
   * come from two rule families:
   *
   *  1. surface-identity chains: mentions of one document whose
-  *     case/separator-folded alias matches (the same normalizer family
-  *     as the cross-document CC, [[Canonicalize.normalForms]]) form one
+  *     case/separator-folded alias matches (the cross-document CC's
+  *     fold, [[Canonicalize.foldedExpr]]) form one
   *     chain, first occurrence first — the in-document precursor of the
   *     cross-doc merge;
   *  2. anaphora chains: configurable pronoun tokens resolved to the
@@ -49,7 +49,8 @@ object CorefChains {
     // cross-document CC's gazette-first representative pick.
     val surface = sorted
       .filter(!_.from_gazette)
-      .groupBy(m => (m.kind, m.alias.toLowerCase.replaceAll("[-_\\s]+", "")))
+      .groupBy(m => (m.kind,
+        m.alias.toLowerCase.replaceAll(Canonicalize.FoldSeparators, "")))
       .values.filter(_.size >= 2)
       .map(ms => ms.map(span).toSeq)
       .toSeq

@@ -82,9 +82,9 @@ object Pipeline {
     * gazette + camel NER (no-overlap combine, gazette first), dedupe,
     * segment. Pure function — runs as one fused map.
     *
-    * `withParses`: the stored-doc surface ([[preprocess]]) populates the
-    * per-sentence shallow-parse column (`syntactic_sentences`,
-    * reference models.py:86); the fused triple extract passes false —
+    * `withParses` (default true) populates the per-sentence
+    * shallow-parse column (`syntactic_sentences`, reference
+    * models.py:86); the fused triple extract passes false —
     * it never stores docs, so building parse strings there would be
     * pure hot-path waste at corpus scale. */
   def preprocessDoc(raw: RawDoc, gazette: LiteralNer,
@@ -122,41 +122,6 @@ object Pipeline {
       docId, tk.tokens, combined, entOf, chains)
     val segments = Segmenter.segmentsOf(doc, merged)
     DocBundle(doc, merged.toArray, segments.toArray)
-  }
-
-  def preprocess(spark: SparkSession, raw: Dataset[RawDoc],
-      gazette: Seq[(String, String)]): Dataset[DocBundle] = {
-    import spark.implicits._
-    val bc = spark.sparkContext.broadcast(gazette)
-    raw.mapPartitions { it =>
-      val ner = cachedNer(bc)
-      it.map(preprocessDoc(_, ner))
-    }
-  }
-
-  /** Candidate generation + rule matching, fused per partition: the
-    * compiled rule NFAs are built once per partition (broadcast-equivalent
-    * of the reference's lru-cached compile, `rules_core.py:37-39`). */
-  def predict(spark: SparkSession, bundles: Dataset[DocBundle]): Dataset[Prediction] = {
-    import spark.implicits._
-    val relations = CodeRules.relations
-    bundles.mapPartitions { it =>
-      // compile each relation's NFA once per partition (the distributed
-      // analog of the reference's lru-cached compile, rules_core.py:37-39)
-      val cores = relations.map { case (rel, rules) =>
-        (rel, new Rules.RuleCore(rules, rel.leftKind, rel.rightKind))
-      }
-      it.flatMap { b =>
-        b.segments.iterator.flatMap { seg =>
-          cores.iterator.flatMap { case (rel, core) =>
-            Candidates.evidencesOf(seg, rel).iterator.map { ev =>
-              Prediction(ev.evidence_id, rel.name, ev.left_key, ev.right_key,
-                core.predict(Candidates.tokensToMatch(ev)))
-            }
-          }
-        }
-      }
-    }
   }
 
   /** One doc's extraction output — only what downstream stages need.
@@ -255,10 +220,6 @@ object Pipeline {
       () => { extracted.unpersist(); cleanup() }, trunc)
   }
 
-  /** Link + canonicalize + triple assembly over extraction output —
-    * shared by the in-memory ([[runWithMetrics]]), checkpointed
-    * ([[runCheckpointed]]) and streaming (foreachBatch re-link over the
-    * accumulated extract table) paths. */
   /** Global entity dedupe (one row per entity_key) — THE aggregation
     * semantics for entity tables; the streaming incremental linker
     * merges state + batch with the same aggregate, so any accumulation
@@ -288,6 +249,9 @@ object Pipeline {
         col("evidence_id"))
   }
 
+  /** Link + canonicalize + triple assembly over extraction output —
+    * shared by the in-memory ([[runWithMetrics]]) and checkpointed
+    * ([[runCheckpointed]]) paths. */
   private[graft] def assembleTriples(spark: SparkSession,
       extracted: Dataset[DocExtract]): (DataFrame, () => Unit) = {
     import spark.implicits._

@@ -24,19 +24,20 @@ import graft.schema.RawDoc
   *
   * Cross-document linking (connected-components canonicalization) is a
   * GLOBAL computation — any new doc can reshape components. But it can
-  * still be updated incrementally WITHOUT approximation, because CC
-  * merges only travel along shared (kind, surface-form) edges: a batch
-  * can only reshape components REACHABLE from its own entities' forms.
+  * still be updated incrementally WITHOUT approximation, because a
+  * component IS a (kind, folded-form) hub group
+  * ([[Canonicalize.hubExpr]], by the refinement-chain contract at
+  * [[Canonicalize.foldedExpr]]): a batch can only reshape the hubs its
+  * own entities land in, plus the hubs its recurring entity keys leave.
   * Per micro-batch the linker therefore:
   *
-  *   1. finds the prior components TOUCHED by the batch (batch forms
-  *      joined against the accumulated entity-form table — entity-vocab
-  *      bounded, never corpus bounded);
-  *   2. re-runs CC on touched-component entities + batch entities ONLY
-  *      (the star-shape contract in [[Canonicalize.normalForms]] makes
-  *      one component-hop closure sufficient: every merge chain passes
-  *      through a batch entity, whose direct form-neighbors all lie in
-  *      touched components);
+  *   1. collects the TOUCHED hubs — the batch entities' hubs plus the
+  *      prior hubs of entity keys that recur in the batch — and takes
+  *      the prior entities of those hubs with one semi-join (hubs are
+  *      computed on read; entity-vocab bounded, never corpus bounded);
+  *   2. re-runs CC on those entities + batch entities ONLY (every member
+  *      of a touched component is in it, so the representative
+  *      election sees the whole component);
   *   3. unions the untouched remainder of the previous canonical map —
   *      bit-identical to a full re-link (the spec proves stream==batch);
   *   4. rebuilds only the triples whose subject OR object component was
@@ -266,37 +267,36 @@ object StreamingExtract {
           val prevEnts = cached(spark.read.parquet(s"$p/entities"))
           val prevCanon = cached(spark.read.parquet(s"$p/canonical"))
           val prevTriples = spark.read.parquet(s"$p/triples")
-          // 1. touched components: prior entities sharing ANY
-          //    (kind, form) with a batch entity, lifted to their
-          //    component. Both sides entity-vocab bounded.
-          val batchForms = Canonicalize.entityForms(batchEnts)
-            .select($"form").distinct()
-          // touched = prior entities sharing a (kind, form) with the
-          // batch, PLUS prior entities whose entity_key itself recurs
-          // in the batch. The second leg is NOT redundant: coref
-          // repointing can attach a form-disjoint, lexicographically
-          // smaller alias to an existing key (e.g. a created anaphora
-          // mention on a gazette canonical), and dedupeEntities'
-          // min(alias) then REPLACES the key's form set — without the
-          // key-identity leg the key's prior component reads as
-          // untouched, newCanon holds the key twice (sub-CC + untouched
-          // remainder) and the alias-min's split/re-merge never applies,
-          // breaking the bit-identical-to-full-re-link guarantee.
-          val touchedKeys0 = Canonicalize.entityForms(prevEnts)
-            .join(batchForms, "form").select($"entity_key")
+          // 1. touched hubs: the batch entities' (kind, folded-form)
+          //    hubs, PLUS the prior hubs of entity keys that recur in the
+          //    batch. The second leg is NOT redundant: coref repointing
+          //    can attach a form-disjoint, lexicographically smaller alias
+          //    to an existing key (e.g. a created anaphora mention on a
+          //    gazette canonical), and dedupeEntities' min(alias) then
+          //    MOVES the key to another hub — without the recurring-key
+          //    leg the key's prior component reads as untouched, newCanon
+          //    holds the key twice (sub-CC + untouched remainder) and the
+          //    alias-min's split/re-merge never applies, breaking the
+          //    bit-identical-to-full-re-link guarantee. Hubs are computed
+          //    on read; the state keeps its entity/canonical schema.
+          val touchedHubs = batchEnts.select(Canonicalize.hubExpr.as("hub"))
             .unionByName(prevEnts
               .join(batchEnts.select($"entity_key"),
                 Seq("entity_key"), "leftsemi")
-              .select($"entity_key"))
+              .select(Canonicalize.hubExpr.as("hub")))
             .distinct()
-          val touchedComps = cached(prevCanon.join(touchedKeys0, "entity_key")
+          // every prior entity of a touched hub — a component IS a hub
+          // group, so these are all members of the touched components
+          // (the CC re-run needs the full component, or the
+          // representative election would forget members)
+          val touchedEnts = cached(prevEnts
+            .withColumn("hub", Canonicalize.hubExpr)
+            .join(touchedHubs, Seq("hub"), "leftsemi")
+            .drop("hub"))
+          val touchedAllKeys = touchedEnts.select($"entity_key")
+          val touchedComps = cached(prevCanon
+            .join(touchedAllKeys, "entity_key")
             .select($"canonical").distinct())
-          // every entity of a touched component (the CC re-run needs the
-          // full component, or the representative election would forget
-          // members)
-          val touchedEnts = prevEnts.join(prevCanon, "entity_key")
-            .join(touchedComps, Seq("canonical"), "leftsemi")
-            .drop("canonical")
           // 2. CC over touched + batch only
           val ccInput = cached(Pipeline.dedupeEntities(
             touchedEnts.unionByName(batchEnts)))
@@ -315,9 +315,6 @@ object StreamingExtract {
               Seq("subj"), "left_anti")
             .join(touchedComps.withColumnRenamed("canonical", "obj"),
               Seq("obj"), "left_anti")
-          val touchedAllKeys = cached(prevCanon
-            .join(touchedComps, Seq("canonical"), "leftsemi")
-            .select($"entity_key"))
           val oldDirs = extractDirsBefore(extractDir, curName)
           val touchedOldPreds =
             if (oldDirs.isEmpty) batchPreds.limit(0)

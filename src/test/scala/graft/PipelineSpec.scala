@@ -57,10 +57,12 @@ class PipelineSpec extends SparkSpec {
       .collect().map(r => r.getString(0) -> r.getString(1)).toMap
     assert(comp("a") == comp("b") && comp("b") == comp("c"))
     assert(comp("d") != comp("a"))
-    // and the guard actually fires when rounds < diameter
+    // and the guard actually fires on 0 propagation rounds: identity
+    // components (every entity its own component) leave form edges
+    // crossing components
     val e = intercept[IllegalArgumentException] {
-      Canonicalize.components(spark, entities, iterations = 0,
-        verifyConverged = true).collect()
+      Canonicalize.requireConverged(entities,
+        entities.select($"entity_key", $"entity_key".as("canonical")))
     }
     assert(e.getMessage.contains("not converged"))
   }

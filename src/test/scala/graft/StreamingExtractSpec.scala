@@ -280,6 +280,75 @@ class StreamingExtractSpec extends SparkSpec {
       .select("canonical").head().getString(0) == "zebraFun")
   }
 
+  test("incremental link == full re-link after every batch (randomized, recurring keys)") {
+    import spark.implicits._
+    import Pipeline.{DocExtract, EntityRow, Prediction}
+    // PipelineSpec's hub == propagation alias mix (case, underscores,
+    // dashes, spaces, CamelCase) over 400 entities in 5 seeded batches.
+    // Later batches re-emit earlier keys, about half of them with a
+    // smaller, form-disjoint alias ("0re_*" sorts below every "alias_*"
+    // style): dedupeEntities' min(alias) moves those keys to a new hub,
+    // splitting their old component and merging keys of different old
+    // components — the coref-repointing shape of the regression above
+    val rnd = new scala.util.Random(11)
+    val styles = Seq[String => String](
+      identity,
+      _.toUpperCase,
+      s => s.replace("_", "-"),
+      s => s.replace("_", " "),
+      s => s.split("_").map(_.capitalize).mkString) // CamelCase
+    def style(base: String): String = styles(rnd.nextInt(styles.length))(base)
+    def kindOf(i: Int): String = if (i % 3 == 0) "FUNCTION" else "MODULE"
+    val fresh = rnd.shuffle((0 until 400).toVector).grouped(80).toVector
+    val batches = fresh.indices.map { b =>
+      val rows = fresh(b).map(i =>
+        EntityRow(s"e$i", kindOf(i), style(s"alias_${i % 60}"),
+          rnd.nextBoolean()))
+      val recurring = rnd.shuffle(fresh.take(b).flatten).take(20).map { i =>
+        val base = if (rnd.nextBoolean()) s"0re_${i % 7}" else s"alias_${i % 60}"
+        EntityRow(s"e$i", kindOf(i), style(base), rnd.nextBoolean())
+      }
+      rnd.shuffle(rows ++ recurring).grouped(10).zipWithIndex.map {
+        case (ents, d) =>
+          val preds = (0 until 6).map { k =>
+            Prediction(s"ev${b}_${d}_$k", if (k % 2 == 0) "calls" else "uses",
+              ents(rnd.nextInt(ents.size)).entity_key,
+              ents(rnd.nextInt(ents.size)).entity_key,
+              answer = rnd.nextInt(4) != 0)
+          }
+          DocExtract(s"d${b}_$d", preds.toArray, ents.toArray)
+      }.toSeq
+    }
+
+    def pairs(df: org.apache.spark.sql.DataFrame): Seq[(String, String)] =
+      df.select("entity_key", "canonical").as[(String, String)]
+        .collect().toSeq.sorted
+    def rows(df: org.apache.spark.sql.DataFrame): Seq[(String, String, String, String)] =
+      df.select("subj", "pred", "obj", "evidence_id")
+        .as[(String, String, String, String)].collect().toSeq.sorted
+    val dir = Files.createTempDirectory("graft-stream-random").toString
+    var seen = Seq.empty[DocExtract]
+    batches.zipWithIndex.foreach { case (batch, b) =>
+      batch.toDS().write.parquet(f"$dir/extract_stream/batch_$b%08d")
+      StreamingExtract.incrementalLink(spark, dir, b.toLong)
+      seen = seen ++ batch
+      val fullCanon = graft.canonical.Canonicalize.components(spark,
+        Pipeline.dedupeEntities(seen.flatMap(_.entities).toDF()))
+      val state = Fs.listDirs(s"$dir/state", "batch_").last
+      assert(latestMetrics(dir)("incremental") == (if (b == 0) 0L else 1L))
+      assert(pairs(spark.read.parquet(s"$state/canonical")) == pairs(fullCanon),
+        s"batch $b: state canonical map != components over all entities")
+      val expected = rows(Pipeline.triplesOf(
+        seen.flatMap(_.predictions).toDF().filter($"answer"), fullCanon))
+      assert(rows(spark.read.parquet(s"$dir/triples")) == expected,
+        s"batch $b: incremental triples != full re-link")
+    }
+    // the data exercised what it claims: keys moved to a "0re" hub
+    val moved = seen.flatMap(_.entities).groupBy(_.entity_key).values
+      .count(_.map(_.alias).min.startsWith("0"))
+    assert(moved > 10, s"only $moved keys moved hub")
+  }
+
   test("tiered compaction: cascading folds, crash leftovers, legacy-compact compat") {
     import spark.implicits._
     def mkPlain(dir: String, i: Int): Unit =
