@@ -3,6 +3,7 @@ package graft
 import java.nio.file.{Files, Paths}
 import scala.collection.mutable.ArrayBuffer
 import org.apache.spark.sql.SparkSession
+import graft.ml.ActiveLearning
 import graft.schema.{Evidence, SegMention}
 
 /** Driver-run benchmark: one JSON line on stdout.
@@ -97,9 +98,9 @@ object Bench {
       .redirectError(ProcessBuilder.Redirect.DISCARD) // Spark stderr
                                                       // would fill the pipe
     pb.environment().put("GRAFT_TIMED_RUNS", timedRuns.toString)
-    // Bench children run AQE-off with PLAIN SHUFFLE JOINS (dim hint
-    // auto): AQE's per-stage re-planning is pure fixed latency at
-    // single-node scale (measured 5.4 s of the 32 s SF=1.0 8-core run).
+    // Bench children run AQE-off with PLAIN SHUFFLE JOINS: AQE's
+    // per-stage re-planning is pure fixed latency at single-node scale
+    // (measured 5.4 s of the 32 s SF=1.0 8-core run).
     // Round 5's stage-timed SF=1-vs-SF=2 pairs found the round-4 forced
     // dimension broadcast WAS the SF sub-linearity: the canonical map
     // grows with the corpus (798k -> 1.59M entities at SF=1 -> SF=2),
@@ -109,7 +110,6 @@ object Bench {
     // honest, 100 TB-shaped config. Library default stays AQE-on: AQE
     // makes the broadcast-vs-shuffle call per join from runtime sizes.
     pb.environment().put("SPARK_GRAFT_AQE", "false")
-    pb.environment().put("GRAFT_DIM_BROADCAST", "auto")
     pb.environment().put("GRAFT_INNER_PROBES", "1")
     val p = pb.start()
     val out = scala.io.Source.fromInputStream(p.getInputStream)
@@ -130,25 +130,25 @@ object Bench {
   }
 
   /** Raw-CPU probe: wall seconds for a FIXED amount of sha256 chain
-    * hashing on `threads` threads (zero shared state, zero allocation
+    * hashing (8 threads x 12M hashes; zero shared state, zero allocation
     * churn). On a quiet machine this is constant to a few percent; any
     * background load (another JVM, the driver's own oracle runs)
     * inflates it immediately — which is exactly what poisoned the
     * round-2 4N measurements.
     *
-    * Noise characterization on this VM (ProbeStats): a single reading at
-    * 12M hashes/thread spreads ~25% around the quiet floor (upper tail
-    * only), min-of-2 back-to-back readings spread ~8-10%; the FIRST
+    * Noise characterization from repeated readings: a single reading
+    * spreads ~25% around the quiet floor (upper tail only), min-of-2
+    * back-to-back readings spread ~8-10%; the FIRST
     * reading in a JVM runs ~30% hot from sha256 JIT warm-up. Hence
     * [[probePoint]] (min-of-2) and the discarded warm-up read in main. */
-  def cpuProbe(threads: Int = 8, hashesPerThread: Int = 12000000): Double = {
+  def cpuProbe(): Double = {
     val t0 = System.nanoTime()
-    val ts = (0 until threads).map { t =>
+    val ts = (0 until 8).map { t =>
       val th = new Thread(() => {
         val md = java.security.MessageDigest.getInstance("SHA-256")
         var buf = Array.fill[Byte](64)(t.toByte)
         var i = 0
-        while (i < hashesPerThread) { buf = md.digest(buf); i += 1 }
+        while (i < 12000000) { buf = md.digest(buf); i += 1 }
       })
       th.start(); th
     }
@@ -201,9 +201,6 @@ object Bench {
     * seconds. The labeled set is annotation-scale by construction — the
     * round's cost is dominated by the 5-fold CV fits and the sample
     * scoring, which is what this number tracks. */
-  private[graft] def alRoundSecForDev(spark: SparkSession): Double =
-    alRoundSec(spark)
-
   private def alRoundSec(spark: SparkSession): Double = {
     import spark.implicits._
     val labeled = spark.range(200)
@@ -215,8 +212,8 @@ object Bench {
       .map(i => alEvidence(i, i % 2 == 0)).toDF()
     labeled.count(); unlabeled.count() // materialize inputs pre-timer
     val t0 = System.nanoTime()
-    val (_, questions) = ActiveLearningBenchShim.round(spark, labeled,
-      unlabeled)
+    val (_, questions) = ActiveLearning.process(spark, labeled, unlabeled,
+      tradeoff = Some(ActiveLearning.HighPrecisionTradeoff))
     questions.write.format("noop").mode("overwrite").save()
     (System.nanoTime() - t0) / 1e9
   }
@@ -262,10 +259,10 @@ object Bench {
     // longer launder a loaded measurement as clean, because any later
     // quieter reading exposes it.
     def floor(): Double = allProbeReadings.min
-    // Bar calibration (measured, ProbeStats + dry runs): min-of-2 probe
-    // POINTS on an idle machine still spread ~±20% around the session
-    // min — the 8-thread turbo/frequency state depends on what the
-    // other 24 vcores were doing moments before, so the floor itself
+    // Bar calibration (measured: repeated probe readings + dry runs):
+    // min-of-2 probe POINTS on an idle machine still spread ~±20% around
+    // the session min — the 8-thread turbo/frequency state depends on
+    // what the other 24 vcores were doing moments before, so the floor itself
     // dips below typical-quiet. Genuine contention (another Spark JVM,
     // the driver's oracle runs) inflates points 50-100%+. 1.4x the
     // floor separates the two regimes; 1.15x flagged quiet pairs.
@@ -793,14 +790,4 @@ object Bench {
       }
     } catch { case _: Throwable => () }
   }
-}
-
-/** Bridge so Bench can drive one AL round without depending on ml
-  * internals: kept tiny and side-effect-free. */
-private object ActiveLearningBenchShim {
-  def round(spark: SparkSession,
-      labeled: org.apache.spark.sql.DataFrame,
-      unlabeled: org.apache.spark.sql.DataFrame) =
-    graft.ml.ActiveLearning.process(spark, labeled, unlabeled,
-      tradeoff = Some(graft.ml.ActiveLearning.HighPrecisionTradeoff))
 }

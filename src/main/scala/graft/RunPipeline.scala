@@ -23,11 +23,6 @@ object RunPipeline {
       .config("spark.sql.shuffle.partitions", cores)
       .config("spark.sql.adaptive.enabled",
         sys.env.getOrElse("SPARK_GRAFT_AQE", "true"))
-      // bench children run AQE-off (its per-stage re-planning is pure
-      // fixed latency at single-node scale) and instead force the
-      // dimension-side broadcast hints that AQE would have chosen
-      .config("graft.dim.broadcast",
-        sys.env.getOrElse("GRAFT_DIM_BROADCAST", "auto"))
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .getOrCreate()

@@ -89,12 +89,10 @@ object Canonicalize {
       else lit(0)
     val keyed = entities.select($"entity_key", hubExpr.as("hub"),
       struct(gazRank.as("r"), $"entity_key".as("k")).as("init"))
-    // byHub is component-count-sized — far below the entity table.
-    // dimSide: AQE broadcasts it when measured small (default); the
-    // bench children run AQE-off and force the hint
-    // (graft.dim.broadcast).
+    // byHub is component-count-sized — far below the entity table; AQE
+    // broadcasts it when measured small, no hint (see the TextOps note).
     val byHub = keyed.groupBy($"hub").agg(min($"init").as("component"))
-    val canonical = keyed.join(graft.textops.TextOps.dimSide(byHub), "hub")
+    val canonical = keyed.join(byHub, "hub")
       .select($"entity_key", $"component.k".as("canonical"))
     if (verifyConverged) requireConverged(entities, canonical)
     canonical

@@ -9,9 +9,10 @@ import org.apache.spark.sql.graftbridge.Bridge
 import org.apache.spark.sql.types._
 
 /** Index of the first position where two equal-length long arrays hold
-  * the same value; -1 when no position matches. Value-identical to
-  * `array_position(zip_with(a, b, _ === _), true) - 1` (under the
-  * equal-length, no-null preconditions the LSH band tables establish).
+  * the same non-null value; -1 when no position matches. Value-identical
+  * to `array_position(zip_with(a, b, _ === _), true) - 1` (under the
+  * equal-length precondition the LSH band tables establish): a null slot
+  * on either side compares null there, so it never matches.
   *
   * Why a custom Expression: the composed higher-order form
   * (`slice`/`zip_with`/`filter`) is CodegenFallback — interpreted
@@ -41,7 +42,8 @@ case class FirstEqualIndex(left: Expression, right: Expression)
     val n = math.min(a.numElements(), b.numElements())
     var i = 0
     while (i < n) {
-      if (a.getLong(i) == b.getLong(i)) return i
+      if (!a.isNullAt(i) && !b.isNullAt(i) && a.getLong(i) == b.getLong(i))
+        return i
       i += 1
     }
     -1

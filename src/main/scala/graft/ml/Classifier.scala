@@ -139,23 +139,31 @@ object RelationClassifier {
     else Features.withDefaultFeatures(evidence)
   }
 
+  /** Bags -> binary vectors -> one `sparse_features` vector. */
+  private def sparseFeatures(vectorizers: Seq[CountVectorizerModel],
+      df: DataFrame): DataFrame =
+    new VectorAssembler()
+      .setInputCols(bagCols.map(_ + "_vec").toArray)
+      .setOutputCol("sparse_features")
+      .transform(vectorizers.foldLeft(df)((d, v) => v.transform(d)))
+
+  /** Inner-SVC margin (`inner_margin`) + the dense numeric features ->
+    * one `dense_features` vector. */
+  private def denseFeatures(innerSvc: LinearSVCModel,
+      df: DataFrame): DataFrame =
+    new VectorAssembler()
+      .setInputCols((denseCols :+ "inner_margin").toArray)
+      .setOutputCol("dense_features")
+      .transform(innerSvc.transform(df)
+        .withColumn("inner_margin",
+          vector_to_array(col("svcRaw")).getItem(1))
+        .drop("svcRaw", "svcPrediction"))
+
   /** Shared featurization: bags -> vectors -> inner margin -> dense
     * assembly -> scaling. */
-  private def scaledFeatures(m: Model, evidence: DataFrame): DataFrame = {
-    var df = featurized(evidence)
-    m.vectorizers.foreach(v => df = v.transform(df))
-    df = new VectorAssembler()
-      .setInputCols(bagCols.map(_ + "_vec").toArray)
-      .setOutputCol("sparse_features").transform(df)
-    df = m.innerSvc.transform(df)
-      .withColumn("inner_margin",
-        vector_to_array(col("svcRaw")).getItem(1))
-      .drop("svcRaw", "svcPrediction")
-    df = new VectorAssembler()
-      .setInputCols((denseCols :+ "inner_margin").toArray)
-      .setOutputCol("dense_features").transform(df)
-    m.scaler.transform(df)
-  }
+  private def scaledFeatures(m: Model, evidence: DataFrame): DataFrame =
+    m.scaler.transform(denseFeatures(m.innerSvc,
+      sparseFeatures(m.vectorizers, featurized(evidence))))
 
   /** Fit on labeled evidence (boolean `label` column); requires both
     * classes present (reference `active_learning_core.py:127-134`). */
@@ -209,10 +217,7 @@ object RelationClassifier {
         }
       }), Duration.Inf)
     }
-    vectorizers.foreach(v => df = v.transform(df))
-    df = new VectorAssembler()
-      .setInputCols(bagCols.map(_ + "_vec").toArray)
-      .setOutputCol("sparse_features").transform(df)
+    df = sparseFeatures(vectorizers, df)
     // tol 1e-3 mirrors the reference's own optimizer defaults (sklearn
     // SGDClassifier tol=1e-3 for the inner ClassifierAsFeature, SVC
     // tol=1e-3 for the final stage); Spark's 1e-6 default is stricter
@@ -223,13 +228,7 @@ object RelationClassifier {
       .setLabelCol("y").setPredictionCol("svcPrediction")
       .setRawPredictionCol("svcRaw")
       .setMaxIter(50).setRegParam(0.01).setTol(1e-3).fit(df)
-    df = innerSvc.transform(df)
-      .withColumn("inner_margin",
-        vector_to_array(col("svcRaw")).getItem(1))
-      .drop("svcRaw", "svcPrediction")
-    df = new VectorAssembler()
-      .setInputCols((denseCols :+ "inner_margin").toArray)
-      .setOutputCol("dense_features").transform(df)
+    df = denseFeatures(innerSvc, df)
     // second truncation point: the scaler fit and the final-stage fit
     // both action over this subtree, whose plan now carries the four
     // vectorizer transforms + the inner-SVC scoring

@@ -233,17 +233,15 @@ object Pipeline {
 
   /** Canonical-key joins: positive predictions x canonical map ->
     * [subj, pred, obj, evidence_id]. The canonical map is
-    * distinct-entity-sized: dimSide leaves the join choice to AQE by
-    * default (broadcast when measured small, shuffle join at true
-    * scale) and lets AQE-off callers force the hint. */
+    * distinct-entity-sized and carries no broadcast hint: AQE picks the
+    * join (broadcast when measured small, shuffle join at true scale). */
   private[graft] def triplesOf(positivePreds: DataFrame,
       canonical: DataFrame): DataFrame = {
-    val dim = (df: DataFrame) => graft.textops.TextOps.dimSide(df)
     val cn = canonical.withColumnRenamed("entity_key", "k")
     positivePreds
-      .join(dim(cn.withColumnRenamed("canonical", "subj")),
+      .join(cn.withColumnRenamed("canonical", "subj"),
         col("left_key") === col("k")).drop("k")
-      .join(dim(cn.withColumnRenamed("canonical", "obj")),
+      .join(cn.withColumnRenamed("canonical", "obj"),
         col("right_key") === col("k")).drop("k")
       .select(col("subj"), col("relation").as("pred"), col("obj"),
         col("evidence_id"))
@@ -320,7 +318,7 @@ object Pipeline {
     * `metrics` (e.g. truncated_segments) version with the data either
     * way (`metrics.json` / table properties). */
   def materialize(spark: SparkSession, triples: DataFrame, outDir: String,
-      buckets: Int = 32, metrics: Map[String, Long] = Map.empty): Unit =
+      metrics: Map[String, Long] = Map.empty): Unit =
     graft.sources.TripleSink.resolve()
-      .write(spark, triples, outDir, buckets, metrics)
+      .write(spark, triples, outDir, metrics)
 }

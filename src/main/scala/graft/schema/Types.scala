@@ -112,19 +112,8 @@ final case class Label(
     by_machine: Boolean,
     modification_ts: Long)
 
-/** The output fact (reference `iepy/extraction/terminal.py:168-179`):
-  * canonical subject/object keys + the supporting evidence. */
-final case class Triple(
-    subj: String,
-    pred: String,
-    obj: String,
-    evidence_id: String)
-
 /** A relation definition (reference `iepy/data/models.py:482-505`). */
 final case class Relation(
     name: String,
     leftKind: String,
     rightKind: String)
-
-/** A gazette entry (reference `iepy/data/models.py:719-725`). */
-final case class GazetteItem(literal: String, kind: String)

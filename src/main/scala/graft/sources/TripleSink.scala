@@ -34,13 +34,17 @@ import graft.pipeline.Fs
 trait TripleSink {
   /** Materialize `triples` [subj, pred, obj, evidence_id] to `target`
     * (a directory for the parquet sink, a catalog table identifier for
-    * Iceberg), bucketed `buckets` ways by subject hash and partitioned
-    * by predicate. `metrics` are run-level lineage counters. */
+    * Iceberg), bucketed [[TripleSink.Buckets]] ways by subject hash and
+    * partitioned by predicate. `metrics` are run-level lineage
+    * counters. */
   def write(spark: SparkSession, triples: DataFrame, target: String,
-      buckets: Int, metrics: Map[String, Long]): Unit
+      metrics: Map[String, Long]): Unit
 }
 
 object TripleSink {
+  /** Subject-hash bucket count of every triple table. */
+  val Buckets = 32
+
   /** The best sink the runtime can support: Iceberg when its Spark
     * runtime is present, the parquet bucket-analog otherwise. */
   def resolve(): TripleSink = resolveFor(IcebergTripleSink.available)
@@ -57,63 +61,19 @@ object TripleSink {
   * requires `iceberg-spark-runtime` + a catalog conf at runtime. */
 final class IcebergTripleSink extends TripleSink {
   override def write(spark: SparkSession, triples: DataFrame,
-      target: String, buckets: Int, metrics: Map[String, Long]): Unit = {
+      target: String, metrics: Map[String, Long]): Unit = {
     // bucket() is Spark's V2 partition-transform function: Iceberg lays
     // the table out exactly like the parquet analog's hash(subj) files,
     // but with manifest-level pruning and snapshot isolation on top
     triples.writeTo(target)
       .using("iceberg")
-      .partitionedBy(bucket(buckets, col("subj")), col("pred"))
+      .partitionedBy(bucket(TripleSink.Buckets, col("subj")), col("pred"))
       .createOrReplace()
     // run-level metrics ride the snapshot: set as table properties so
     // they version with the data (the parquet analog's metrics.json)
     metrics.foreach { case (k, v) =>
       spark.sql(s"ALTER TABLE $target SET TBLPROPERTIES " +
         s"('graft.metrics.$k' = '$v')")
-    }
-  }
-
-  /** Incremental commit for the streaming / checkpointed paths — the
-    * Iceberg analog of the parquet visible-dir swap (and of the
-    * reference's update_mode upsert, `/root/reference/iepy/utils.py:92-135`):
-    * instead of replacing the whole table per micro-batch
-    * ([[write]]'s createOrReplace, correct only for full batch
-    * materialization), replace ONLY the rows of the components the
-    * batch touched — a DELETE keyed on canonical subject/object
-    * membership, then an APPEND of the rebuilt rows.
-    *
-    * Replay safety (the streaming sink's at-least-once contract): the
-    * DELETE predicate covers the WHOLE component space the APPEND
-    * writes into — the union of the touched PRIOR canonicals and
-    * `rebuilt`'s own distinct subj/obj. Touched prior canonicals alone
-    * are not enough: `rebuilt` also carries rows under NEW canonicals —
-    * brand-new components from batch-only entities, and touched
-    * components whose min-alias canonical changed after re-CC — and on
-    * an at-least-once replay (crash after INSERT, before the streaming
-    * checkpoint commit) those rows would survive a prior-canonical-only
-    * DELETE and be appended again. With the union predicate a crash
-    * between the two statements, or a full re-run of the batch,
-    * converges to the same table instead of duplicating rows. On Iceberg each statement is one isolated
-    * snapshot; readers between the two see a table missing only
-    * touched-component rows, never a torn file set (the same guarantee
-    * the parquet path gets from its swap dir).
-    *
-    * `touched` is the touched-component table [canonical: String];
-    * `rebuilt` the re-derived triples [subj, pred, obj, evidence_id]. */
-  def writeIncremental(spark: SparkSession, rebuilt: DataFrame,
-      touched: DataFrame, target: String): Unit = {
-    val tag = java.util.UUID.randomUUID().toString.replace("-", "")
-    val tv = s"graft_touched_$tag"
-    val rv = s"graft_rebuilt_$tag"
-    touched.createOrReplaceTempView(tv)
-    rebuilt.createOrReplaceTempView(rv)
-    try {
-      spark.sql(IcebergTripleSink.deleteStatement(target, tv, rv))
-      spark.sql(
-        s"INSERT INTO $target SELECT subj, pred, obj, evidence_id FROM $rv")
-    } finally {
-      spark.catalog.dropTempView(tv)
-      spark.catalog.dropTempView(rv)
     }
   }
 }
@@ -130,29 +90,15 @@ object IcebergTripleSink {
   private[graft] def probeAvailable(load: String => Class[_]): Boolean =
     try { load("org.apache.iceberg.spark.SparkCatalog"); true }
     catch { case _: Throwable => false }
-
-  /** The component-space DELETE of [[IcebergTripleSink.writeIncremental]]
-    * (extracted so the statement shape is spec-assertable without an
-    * executing Iceberg catalog: DELETE + IN-subqueries run through
-    * Iceberg's row-level operations, which no fake can emulate). The
-    * deleted key set is the union of touched prior canonicals and the
-    * rebuilt rows' own subj/obj — see the replay-safety note on
-    * [[IcebergTripleSink.writeIncremental]]. */
-  private[graft] def deleteStatement(target: String,
-      touchedView: String, rebuiltView: String): String = {
-    val keys = s"SELECT canonical FROM $touchedView UNION " +
-      s"SELECT subj FROM $rebuiltView UNION SELECT obj FROM $rebuiltView"
-    s"DELETE FROM $target WHERE subj IN ($keys) OR obj IN ($keys)"
-  }
 }
 
 /** Plain-parquet bucket analog (every property of the north rule except
   * snapshots/schema evolution, which need a table format). */
 object ParquetTripleSink extends TripleSink {
   override def write(spark: SparkSession, triples: DataFrame,
-      target: String, buckets: Int, metrics: Map[String, Long]): Unit = {
+      target: String, metrics: Map[String, Long]): Unit = {
     import spark.implicits._
-    val t = triples.repartition(buckets, hash($"subj"))
+    val t = triples.repartition(TripleSink.Buckets, hash($"subj"))
       .sortWithinPartitions($"subj", $"pred", $"obj")
     t.write.mode("overwrite").partitionBy("pred").parquet(s"$target/triples")
     val manifest = spark.read.parquet(s"$target/triples")

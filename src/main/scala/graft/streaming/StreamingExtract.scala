@@ -78,7 +78,6 @@ object StreamingExtract {
   def runToTriples(spark: SparkSession, raw: Dataset[RawDoc],
       gazette: Seq[(String, String)], workDir: String,
       trigger: Trigger = Trigger.ProcessingTime(0),
-      icebergTable: Option[String] = None,
       compactEvery: Int = 16): StreamingQuery = {
     val extractDir = s"$workDir/extract_stream"
     // fail fast on the pre-batch-dir layout (flat parquet files directly
@@ -101,8 +100,7 @@ object StreamingExtract {
         // a replay rewrites identical content, never duplicates docs
         batch.write.mode("overwrite")
           .parquet(f"$extractDir/batch_$batchId%08d")
-        incrementalLink(batch.sparkSession, workDir, batchId, icebergTable,
-          compactEvery)
+        incrementalLink(batch.sparkSession, workDir, batchId, compactEvery)
       }
       .start()
   }
@@ -226,8 +224,7 @@ object StreamingExtract {
     * state; writes state `batch_<batchId>` and swaps the updated triple
     * table into `workDir/triples`. */
   private[graft] def incrementalLink(spark: SparkSession, workDir: String,
-      batchId: Long, icebergTable: Option[String] = None,
-      compactEvery: Int = 16): Unit = {
+      batchId: Long, compactEvery: Int = 16): Unit = {
     import spark.implicits._
     val extractDir = s"$workDir/extract_stream"
     val stateRoot = s"$workDir/state"
@@ -256,13 +253,12 @@ object StreamingExtract {
     val batchPreds = batchExtract.flatMap(_.predictions).toDF()
       .filter($"answer")
 
-    val (allEnts, newCanon, triples, ccInputN, touchedN, keptPrev, delta) =
+    val (allEnts, newCanon, triples, ccInputN, touchedN, keptPrev) =
       prevDir match {
         case None =>
           val canon = cached(Canonicalize.components(spark, batchEnts))
           (batchEnts, canon, Pipeline.triplesOf(batchPreds, canon),
-            batchEnts.count(), 0L, 0L,
-            None: Option[(DataFrame, DataFrame)])
+            batchEnts.count(), 0L, 0L)
         case Some(p) =>
           val prevEnts = cached(spark.read.parquet(s"$p/entities"))
           val prevCanon = cached(spark.read.parquet(s"$p/canonical"))
@@ -338,8 +334,7 @@ object StreamingExtract {
           val allEnts = Pipeline.dedupeEntities(
             prevEnts.unionByName(batchEnts))
           (allEnts, newCanon, keep.unionByName(rebuilt),
-            ccInput.count(), touchedComps.count(), 1L,
-            Some((touchedComps, rebuilt)): Option[(DataFrame, DataFrame)])
+            ccInput.count(), touchedComps.count(), 1L)
       }
 
     // write state (overwrite: a replayed batch rewrites identical
@@ -361,24 +356,6 @@ object StreamingExtract {
     val tmp = triplesDir + "_tmp"
     persistedTriples.write.mode("overwrite").parquet(tmp)
     Fs.swapInto(tmp, triplesDir)
-    // optional Iceberg twin of the visible table: first batch = full
-    // snapshot write; later batches = touched-component DELETE + APPEND
-    // (NOT createOrReplace — replacing the whole table per micro-batch
-    // would make the incremental link pointless on the catalog path).
-    // Guarded by the runtime probe so the same code is a no-op here
-    // (no Iceberg jars in this sandbox) and live on a real cluster.
-    icebergTable
-      .filter(_ => graft.sources.IcebergTripleSink.available)
-      .foreach { tbl =>
-        val sink = new graft.sources.IcebergTripleSink
-        delta match {
-          case None =>
-            sink.write(spark, persistedTriples, tbl, buckets = 32,
-              metrics = Map("batch_id" -> batchId))
-          case Some((touched, rebuilt)) =>
-            sink.writeIncremental(spark, rebuilt, touched, tbl)
-        }
-      }
     // prune states older than the one a replay of THIS batch would need
     prevDir.foreach { p =>
       val prevName = p.split('/').last

@@ -14,11 +14,10 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   * specs: no Iceberg jars exist in this sandbox, so this catalog is
   * what lets [[graft.sources.IcebergTripleSink]]'s DataFrameWriterV2
   * path EXECUTE (createOrReplace -> drop+create+append on a
-  * non-staging catalog, INSERT INTO -> append, ALTER TABLE SET
-  * TBLPROPERTIES -> alterTable) instead of rotting untested. It
-  * records exactly what a real catalog would receive: the partition
-  * transforms handed to createTable, the written rows, and the table
-  * properties.
+  * non-staging catalog, ALTER TABLE SET TBLPROPERTIES -> alterTable)
+  * instead of rotting untested. It records exactly what a real catalog
+  * would receive: the partition transforms handed to createTable, the
+  * written rows, and the table properties.
   *
   * Register per session with
   * `spark.conf.set("spark.sql.catalog.<name>", classOf[FakeV2Catalog].getName)`.

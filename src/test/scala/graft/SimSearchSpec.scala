@@ -98,7 +98,8 @@ class SimSearchSpec extends SparkSpec {
   test("FirstEqualIndex == composed first-equal-position form") {
     // the codegen'd predicate behind the first-matching-band dedup must
     // agree with the composed higher-order-function reference on every
-    // case class: no match (-1), first-position match, later match
+    // case class: no match (-1), first-position match, later match, and
+    // a null slot (compares null, so never a match)
     val rows = Seq(
       (Array(1L, 2L, 3L), Array(4L, 5L, 6L)),   // no match -> -1
       (Array(1L, 2L, 3L), Array(1L, 9L, 9L)),   // match at 0
@@ -106,6 +107,8 @@ class SimSearchSpec extends SparkSpec {
       (Array(7L, 8L, 9L), Array(9L, 8L, 7L)),   // match at 1
       (Array.empty[Long], Array.empty[Long]))   // empty -> -1
       .toDF("a", "b")
+      .union(Seq((Seq(None, Some(5L)), Seq(Some(0L), Some(5L))))
+        .toDF("a", "b"))                        // [null, 5] vs [0, 5] -> 1
     val got = rows.select(
       graft.functions.FirstEqualIndex.index($"a", $"b").as("i"),
       (coalesce(array_position(

@@ -7,7 +7,7 @@ import graft.sources.{IcebergTripleSink, ParquetTripleSink, TripleSink}
   * probe result and drive the DataFrameWriterV2 path through
   * [[FakeV2Catalog]], a real (minimal) Spark V2 catalog, so the write
   * plumbing (createOrReplace -> create+append, partition transforms,
-  * ALTER TABLE properties, INSERT INTO append) has executed coverage
+  * ALTER TABLE properties) has executed coverage
   * instead of rotting until a user on a real cluster hits it first. */
 class TripleSinkSpec extends SparkSpec {
 
@@ -47,7 +47,7 @@ class TripleSinkSpec extends SparkSpec {
       .toDF("subj", "pred", "obj", "evidence_id")
 
     new IcebergTripleSink().write(spark, triples, "fake_ice.db.triples",
-      buckets = 32, metrics = Map("docs" -> 5L, "truncated" -> 0L))
+      metrics = Map("docs" -> 5L, "truncated" -> 0L))
 
     val stored = FakeV2Catalog.tables("db.triples")
     // the catalog received the north rule's layout: hash-bucketed by
@@ -72,53 +72,8 @@ class TripleSinkSpec extends SparkSpec {
     new IcebergTripleSink().write(spark,
       Seq(("funX", "calls", "funY", "ev9"))
         .toDF("subj", "pred", "obj", "evidence_id"),
-      "fake_ice.db.triples", buckets = 32, metrics = Map.empty)
+      "fake_ice.db.triples", metrics = Map.empty)
     assert(FakeV2Catalog.tables("db.triples").rows.asScala.toSeq ==
       Seq(Seq("funX", "calls", "funY", "ev9")))
-  }
-
-  test("writeIncremental: touched-component DELETE statement + executed APPEND") {
-    import spark.implicits._
-    // the DELETE half runs through Iceberg's row-level operations
-    // (IN-subqueries), which no fake catalog can emulate — its shape is
-    // the contract: delete the WHOLE component space the APPEND
-    // re-writes (touched prior canonicals UNION rebuilt's subj/obj —
-    // rebuilt rows under NEW canonicals would otherwise survive a
-    // replay's DELETE and duplicate), so a replay converges
-    val del = IcebergTripleSink.deleteStatement("cat.db.t", "touched_v",
-      "rebuilt_v")
-    val keys = "SELECT canonical FROM touched_v UNION " +
-      "SELECT subj FROM rebuilt_v UNION SELECT obj FROM rebuilt_v"
-    assert(del == s"DELETE FROM cat.db.t WHERE subj IN ($keys) " +
-      s"OR obj IN ($keys)")
-
-    // the APPEND half executes against the fake catalog: INSERT INTO an
-    // existing table must ADD rows, never replace them
-    spark.conf.set("spark.sql.catalog.fake_ice",
-      classOf[FakeV2Catalog].getName)
-    FakeV2Catalog.reset()
-    new IcebergTripleSink().write(spark,
-      Seq(("funA", "calls", "funB", "ev1"))
-        .toDF("subj", "pred", "obj", "evidence_id"),
-      "fake_ice.db.inc", buckets = 32, metrics = Map.empty)
-    val rebuilt = Seq(("funA", "calls", "funC", "ev2"))
-      .toDF("subj", "pred", "obj", "evidence_id")
-    val touched = Seq("funA").toDF("canonical")
-    val thrown = intercept[Exception] {
-      // DELETE against the fake raises (no row-level op support) —
-      // assert the failure is the DELETE, not the view plumbing
-      new IcebergTripleSink().writeIncremental(spark, rebuilt, touched,
-        "fake_ice.db.inc")
-    }
-    assert(thrown.getMessage != null)
-    // drive the append alone the way writeIncremental does
-    rebuilt.createOrReplaceTempView("graft_rebuilt_spec")
-    spark.sql("INSERT INTO fake_ice.db.inc " +
-      "SELECT subj, pred, obj, evidence_id FROM graft_rebuilt_spec")
-    spark.catalog.dropTempView("graft_rebuilt_spec")
-    import scala.jdk.CollectionConverters._
-    assert(FakeV2Catalog.tables("db.inc").rows.asScala.toSet == Set(
-      Seq("funA", "calls", "funB", "ev1"),
-      Seq("funA", "calls", "funC", "ev2")))
   }
 }
